@@ -243,7 +243,7 @@ def _xxhash_band_rows_pdf(
         flats.append(np.asarray(hs, dtype=np.int64))
     if not doc_ids:
         z = np.array([], dtype=np.int64)
-        return z, z.astype(np.int32), z
+        return np.asarray(ids)[:0], z.astype(np.int32), z
     flat = np.concatenate(flats).view(np.uint64)
     counts = np.asarray(counts, dtype=np.int64)
     starts = np.zeros(len(counts), dtype=np.int64)
@@ -260,7 +260,7 @@ def _xxhash_band_rows_pdf(
         for r in range(rows_per_band):
             h = _xxh64_long(sig_u[:, b * rows_per_band + r], h)
         bh[:, b] = h
-    id_rep = np.repeat(np.asarray(doc_ids, dtype=np.int64), bands)
+    id_rep = np.repeat(np.asarray(doc_ids), bands)
     band = np.tile(np.arange(bands, dtype=np.int32), len(doc_ids))
     return id_rep, band, bh.view(np.int64).reshape(-1)
 
@@ -278,8 +278,19 @@ def xxhash_banded_rows_fast(
     values as signature-expression + banded_rows; ~one Arrow hop carrying
     only (id, hashes) replaces 32 interpreted HOF re-hash passes plus the
     band-fold ladder (guide §4.2 — batch the custom arithmetic in numpy,
-    let Spark keep distribution and the string hashing)."""
+    let Spark keep distribution and the string hashing).
+
+    `__id` keeps the type of `id_col`.  The kernel bands every signature
+    slot, so num_perm must equal bands * rows_per_band."""
     import pandas as pd
+
+    if num_perm != bands * rows_per_band:
+        raise ValueError(
+            "xxhash_banded_rows_fast needs num_perm == bands * rows_per_band, "
+            f"got num_perm={num_perm}, bands={bands}, "
+            f"rows_per_band={rows_per_band}"
+        )
+    id_t = hashed.schema[id_col].dataType.simpleString()
 
     def _sign(batches):
         for pdf in batches:
@@ -291,7 +302,7 @@ def xxhash_banded_rows_fast(
             yield pd.DataFrame({"__id": id_rep, "band": band, "band_hash": bh})
 
     return hashed.select(id_col, "hashes").mapInPandas(
-        _sign, schema="__id long, band int, band_hash bigint"
+        _sign, schema=f"__id {id_t}, band int, band_hash bigint"
     )
 
 

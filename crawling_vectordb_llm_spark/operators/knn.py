@@ -43,6 +43,7 @@ from crawling_vectordb_llm_spark.operators.topk import (
     DEFAULT_MAX_QUERY_ROWS,
     collect_query_rows,
     grouped_topk,
+    normalize_rows,
 )
 
 
@@ -107,7 +108,7 @@ def knn_join_numpy(
     )
     qids = np.array([r[0] for r in qrows])
     qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    qnorm = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-30)
+    qnorm = normalize_rows(qmat)
     bq = spark.sparkContext.broadcast((qids, qnorm))
 
     qid_t = queries.schema[query_id].dataType.simpleString()
@@ -120,7 +121,7 @@ def knn_join_numpy(
             if len(pdf) == 0:
                 continue
             cmat = np.array(list(pdf[corpus_vec]), dtype=np.float64)
-            cn = cmat / np.maximum(np.linalg.norm(cmat, axis=1, keepdims=True), 1e-30)
+            cn = normalize_rows(cmat)
             scores = qn @ cn.T  # (n_queries, batch)
             top = min(k, scores.shape[1])
             # local top-k per query within this batch
@@ -153,7 +154,6 @@ def threshold_similarity_join(
     n_blocks: int | None = None,
     block_target_rows: int = 65_536,
     gemm_chunk_rows: int = 2_048,
-    max_broadcast_rows: int = 1_000_000,
 ) -> DataFrame:
     """All pairs with cosine >= tau.  right=None → self-join (dedup shape):
     emits each unordered pair once (a_id < b_id).
@@ -172,16 +172,10 @@ def threshold_similarity_join(
     P(P+1)/2 tasks.  This is the semdedup.py cogroup-GEMM shape applied to
     an exact (unpruned) grid, per VERDICT r1 #1.
 
-    strategy="broadcast" (alias "numpy", the r1 default): collect + broadcast
-    the right side as one L2-normalized float64 matrix; each left partition
-    does a single GEMM against it.  Fastest when the right side is small and
-    guarded by `max_broadcast_rows` — exceeding it raises instead of
-    OOM-ing the driver.
-
     strategy="sql": pure codegen zip_with/aggregate cosine over a broadcast
-    nested-loop join — kept for the all-JVM plan shape.
+    nested-loop join — the all-JVM exact oracle the tests hold "blocked" to.
 
-    All strategies are exact and quadratic in compute; at 100 TB prefer a
+    Both strategies are exact and quadratic in compute; at 100 TB prefer a
     candidate generator (LSH bands, operators/dedup.py, or IVF cells,
     operators/ivf.py) to prune the pair space first, then verify with this
     operator on the candidates.
@@ -205,13 +199,6 @@ def threshold_similarity_join(
             pairs.withColumn(score_col, V.dot(F.col("__av"), F.col("__bv")))
             .where(F.col(score_col) >= tau)
             .select("a_id", "b_id", F.round(score_col, 6).alias(score_col))
-        )
-
-    if strategy in ("broadcast", "numpy"):
-        return _threshold_join_broadcast(
-            left, right, tau, self_join,
-            left_id, left_vec, right_id, right_vec, score_col,
-            max_broadcast_rows,
         )
 
     if strategy != "blocked":
@@ -386,7 +373,6 @@ def topk_similarity_self_join(
     strategy: str = "auto",
     brute_max_rows: int = BRUTE_TOPK_MAX_ROWS,
     n_cells: "int | None" = None,
-    gemm_prefilter: bool = True,
     stats_out: dict | None = None,
 ) -> DataFrame:
     """BOUNDED-OUTPUT similarity self-join (VERDICT r6 #1): for every item,
@@ -441,7 +427,7 @@ def topk_similarity_self_join(
     flops measured e≈1.75, AB_EXPONENT_POST_r08), while small corpora —
     including every per-cell subproblem the IVF form itself creates —
     keep the cheaper exact kernel.  `strategy="brute"`/`"ivf"` force a
-    side (the A/B harness and the bit-identity tests use this).
+    side (the bit-identity tests use this).
 
     `n_cells=None` (the r12 default) makes the IVF arm's prune
     granularity GEOMETRY-ADAPTIVE: the fine grid is sized by
@@ -482,7 +468,6 @@ def topk_similarity_self_join(
             score_col=score_col,
             item_col=item_col,
             neighbor_col=neighbor_col,
-            gemm_prefilter=gemm_prefilter,
             stats_out=stats_out,
         )
     if stats_out is not None:
@@ -531,7 +516,6 @@ def topk_similarity_self_join(
             a["__id"].to_numpy(), np.array(list(a["__v"]), dtype=np.float64),
             b["__id"].to_numpy(), np.array(list(b["__v"]), dtype=np.float64),
             tau, k, gemm_chunk_rows, diagonal=(i == j),
-            prefilter=gemm_prefilter,
         )
         return pd.DataFrame(
             {item_col: out[0], neighbor_col: out[1], score_col: out[2]}
@@ -641,7 +625,7 @@ def _topk_tau_gemm(
     grid); this halves the constant on that regime — the exponent
     itself is the information cost of exact top-k at recall 1.0 on
     structure-free geometry.  prefilter=False keeps the pure-f64 path
-    for A/B measurement."""
+    as the reference the kernel parity test compares against."""
     empty = (np.array([]), np.array([]), np.array([]))
     if len(a_ids) == 0 or len(b_ids) == 0 or k <= 0:
         return empty
@@ -649,8 +633,8 @@ def _topk_tau_gemm(
     a_ids, a_mat = a_ids[a_ord], a_mat[a_ord]
     b_ord = np.argsort(b_ids, kind="stable")
     b_ids, b_mat = b_ids[b_ord], b_mat[b_ord]
-    a_mat = a_mat / np.maximum(np.linalg.norm(a_mat, axis=1, keepdims=True), 1e-30)
-    b_mat = b_mat / np.maximum(np.linalg.norm(b_mat, axis=1, keepdims=True), 1e-30)
+    a_mat = normalize_rows(a_mat)
+    b_mat = normalize_rows(b_mat)
     if prefilter:
         a32 = a_mat.astype(np.float32)
         b32_t = b_mat.astype(np.float32).T
@@ -784,8 +768,8 @@ def _chunked_tau_gemm(
     if len(a_ids) == 0 or len(b_ids) == 0:
         empty = np.array([])
         return empty, empty, empty
-    a_mat = a_mat / np.maximum(np.linalg.norm(a_mat, axis=1, keepdims=True), 1e-30)
-    b_mat = b_mat / np.maximum(np.linalg.norm(b_mat, axis=1, keepdims=True), 1e-30)
+    a_mat = normalize_rows(a_mat)
+    b_mat = normalize_rows(b_mat)
     if prefilter:
         a32 = a_mat.astype(np.float32)
         b32_t = b_mat.astype(np.float32).T
@@ -831,66 +815,6 @@ def _chunked_tau_gemm(
         empty = np.array([])
         return empty, empty, empty
     return np.concatenate(outs_a), np.concatenate(outs_b), np.concatenate(outs_s)
-
-
-def _threshold_join_broadcast(
-    left: DataFrame,
-    right: DataFrame,
-    tau: float,
-    self_join: bool,
-    left_id: str,
-    left_vec: str,
-    right_id: str,
-    right_vec: str,
-    score_col: str,
-    max_broadcast_rows: int,
-) -> DataFrame:
-    """The r1 strategy: collect + broadcast the right side, one GEMM per left
-    partition.  Now opt-in (strategy="broadcast") and guarded: a right side
-    larger than max_broadcast_rows raises instead of OOM-ing the driver."""
-    spark = left.sparkSession
-    aid_t = left.schema[left_id].dataType.simpleString()
-    bid_t = right.schema[right_id].dataType.simpleString()
-    n_right = right.count()
-    if n_right > max_broadcast_rows:
-        raise ValueError(
-            f"strategy='broadcast' right side has {n_right} rows > "
-            f"max_broadcast_rows={max_broadcast_rows}; use strategy='blocked' "
-            "(distributed) instead"
-        )
-    rrows = right.select(right_id, right_vec).collect()
-    rids = np.array([r[0] for r in rrows])
-    rmat = np.array([r[1] for r in rrows], dtype=np.float64)
-    rmat = rmat / np.maximum(np.linalg.norm(rmat, axis=1, keepdims=True), 1e-30)
-    br = spark.sparkContext.broadcast((rids, rmat))
-
-    def score_block(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_r, mat_r = br.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lmat = np.array(list(pdf[left_vec]), dtype=np.float64)
-            lmat = lmat / np.maximum(
-                np.linalg.norm(lmat, axis=1, keepdims=True), 1e-30
-            )
-            scores = lmat @ mat_r.T
-            lids = pdf[left_id].to_numpy()
-            li, ri = np.nonzero(scores >= tau)
-            a_ids, b_ids = lids[li], ids_r[ri]
-            if self_join:
-                keep = a_ids < b_ids
-                a_ids, b_ids, li, ri = a_ids[keep], b_ids[keep], li[keep], ri[keep]
-            yield pd.DataFrame(
-                {
-                    "a_id": a_ids,
-                    "b_id": b_ids,
-                    score_col: np.round(scores[li, ri], 6),
-                }
-            )
-
-    return left.select(left_id, left_vec).mapInPandas(
-        score_block, schema=f"a_id {aid_t}, b_id {bid_t}, {score_col} double"
-    )
 
 
 def knn_quantized_rerank(

@@ -45,11 +45,8 @@ from crawling_vectordb_llm_spark.operators.topk import (
     DEFAULT_MAX_QUERY_ROWS,
     collect_query_rows,
     grouped_topk,
+    normalize_rows as _normalize,
 )
-
-
-def _normalize(mat: np.ndarray) -> np.ndarray:
-    return mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
 
 
 def auto_m_subvectors(dim: int, sub_d: int = 8) -> int:

@@ -43,6 +43,7 @@ from crawling_vectordb_llm_spark.operators.ivf import (
     assign_centroids,
     kmeans_centroids,
 )
+from crawling_vectordb_llm_spark.operators.topk import normalize_rows
 
 
 def _greedy_keep(mat: np.ndarray, tau: float) -> np.ndarray:
@@ -113,8 +114,7 @@ def semantic_dedup(
 
     def _prune(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
-        mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
+        mat = normalize_rows(np.array(list(pdf[vec_col]), dtype=np.float64))
         keep = _greedy_keep(mat, tau)
         kept = mat[keep]
         max_sim = np.full(len(pdf), -1.0)

@@ -8,8 +8,15 @@ oracle-hash-stable (SURVEY §7 hard part b).
 
 from __future__ import annotations
 
+import numpy as np
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def normalize_rows(mat: np.ndarray) -> np.ndarray:
+    """L2-normalize each row; all-zero rows stay zero (the 1e-30 floor)."""
+    return mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
 
 
 def grouped_topk(
@@ -62,11 +69,10 @@ def global_topk_ranked(
 
 # Default bound for query-side collects across the ANN ladder.  The
 # bounded-collect contract (knn.py docstrings; reference issues one query
-# text at a time, main_server.py:41) assumes <= ~100k queries; 1M matches
-# knn._threshold_join_broadcast's max_broadcast_rows default and is still
-# well under driver memory at 1024 dims (float64 1M x 1024 = 8 GB would be
-# too big — but the guard's point is a CLEAR error before that allocation,
-# not a silent OOM; lower it per-call for wide vectors).
+# text at a time, main_server.py:41) assumes <= ~100k queries; 1M leaves
+# 10x headroom over that.  At 1024 dims 1M float64 rows are 8 GB, too big
+# for the driver — the guard's point is a CLEAR error before that
+# allocation, not a silent OOM; lower it per-call for wide vectors.
 DEFAULT_MAX_QUERY_ROWS = 1_000_000
 
 # (r14: the r6 id-only pre-count probe for large bounds is gone — the
@@ -90,8 +96,7 @@ def collect_query_rows(
     after materializing at most max_rows + 1 rows instead of OOM-ing on
     the full relation.  Below the cap the limit is a no-op and every row
     is returned (order is irrelevant — callers build per-query top-k,
-    never order-sensitive state).  Mirror of _threshold_join_broadcast's
-    guard (knn.py:399).
+    never order-sensitive state).
 
     r14 (guide §1/§5): ONE Arrow collect for every bound.  The r6 shape
     additionally pre-counted the id column for bounds above 100k rows so

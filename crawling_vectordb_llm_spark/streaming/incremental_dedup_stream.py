@@ -273,26 +273,6 @@ def _driver_read_candidate_texts(
     return dict(zip(tbl["doc_id"].to_pylist(), tbl["text"].to_pylist()))
 
 
-def _emit_profile(batch_id: int, marks: list, profile: bool) -> None:
-    """SPARK_GRAFT_STREAM_PROFILE=1 → one stderr line per micro-batch
-    with per-stage wall ms (tooling aid for tools/streaming_bench.py;
-    zero cost when off)."""
-    if not profile or len(marks) < 2:
-        return
-    import sys as _sys
-
-    parts = [
-        f"{lbl}={round((t - marks[i][1]) * 1000)}ms"
-        for i, (lbl, t) in enumerate(marks[1:])
-    ]
-    total = round((marks[-1][1] - marks[0][1]) * 1000)
-    print(
-        f"[dedup-stream-profile] batch={batch_id} total={total}ms "
-        + " ".join(parts),
-        file=_sys.stderr,
-    )
-
-
 def process_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -312,15 +292,6 @@ def process_batch(
     fully distributed recompute on candidate-flood overflow in either
     mode.  All three emit byte-identical pairs (equality test pins the
     driver/distributed twins to the snapshot ladder)."""
-    import time
-
-    profile = os.environ.get("SPARK_GRAFT_STREAM_PROFILE") == "1"
-    marks: list[tuple[str, float]] = [("start", time.time())]
-
-    def _mark(label: str) -> None:
-        if profile:
-            marks.append((label, time.time()))
-
     spark = batch_df.sparkSession
     corpus_dir = os.path.join(store_path, "corpus")
     index_dir = os.path.join(store_path, "index")
@@ -330,7 +301,6 @@ def process_batch(
 
     docs = batch_df.select("doc_id", "text")
     batch_pdf = docs.limit(max_driver_batch_rows + 1).toPandas()
-    _mark("batch_collect")
     if (
         len(batch_pdf) <= max_driver_batch_rows
         and _index_bytes_before(index_dir, batch_id) <= max_driver_index_bytes
@@ -338,9 +308,7 @@ def process_batch(
         done = _process_batch_driver(
             spark, batch_pdf, batch_id, corpus_dir, index_dir,
             pairs_batch_dir, tau, shingle_n, max_bucket, max_collect_pairs,
-            _mark,
         )
-        _emit_profile(batch_id, marks, profile)
         if done:
             return
         # candidate flood past the driver cap: corpus+index for THIS
@@ -353,9 +321,8 @@ def process_batch(
     _process_batch_distributed(
         spark, docs, batch_id, corpus_dir, index_dir, idx_batch_dir,
         pairs_batch_dir, tau, shingle_n, max_bucket, max_collect_pairs,
-        _mark, max_collect_band_rows=max_collect_band_rows,
+        max_collect_band_rows=max_collect_band_rows,
     )
-    _emit_profile(batch_id, marks, profile)
 
 
 def _process_batch_driver(
@@ -369,7 +336,6 @@ def _process_batch_driver(
     shingle_n: int,
     max_bucket: int,
     max_collect_pairs: int,
-    _mark,
 ) -> bool:
     """Driver-mode body: zero Spark jobs.  Returns False on candidate
     flood (caller runs the distributed overflow recompute — this
@@ -386,7 +352,6 @@ def _process_batch_driver(
         ids_np.tolist(), batch_pdf["text"].tolist(), 32, shingle_n,
         _BANDS, 4,
     )
-    _mark("driver_sign")
     _write_parquet_dir(
         os.path.join(corpus_dir, f"batch={batch_id}"),
         pa.table(
@@ -406,14 +371,12 @@ def _process_batch_driver(
             }
         ),
     )
-    _mark("driver_writes")
 
     old_id, old_band, old_bh = _driver_read_index_before(index_dir, batch_id)
     if len(old_id):
         touched = np.unique(bh * _BANDS + band)
         keep = np.isin(old_bh * _BANDS + old_band, touched)
         old_id, old_band, old_bh = old_id[keep], old_band[keep], old_bh[keep]
-    _mark("driver_index_read")
     cand = _driver_pairs(
         np.concatenate([old_id, id_rep]),
         np.concatenate([old_band.astype(np.int64), band.astype(np.int64)]),
@@ -422,7 +385,6 @@ def _process_batch_driver(
         max_bucket,
         max_collect_pairs,
     )
-    _mark("driver_pair_gen")
     if cand is None:
         return False
     if not cand:
@@ -435,10 +397,8 @@ def _process_batch_driver(
     )
     for i in need & new_texts.keys():
         texts[i] = new_texts[i]
-    _mark("driver_text_read")
     a_out, b_out, j_out = _verify_pairs_local(cand, texts, tau, shingle_n)
     _write_pairs_parquet(pairs_batch_dir, a_out, b_out, j_out)
-    _mark("driver_verify_write")
     return True
 
 
@@ -454,7 +414,6 @@ def _process_batch_distributed(
     shingle_n: int,
     max_bucket: int,
     max_collect_pairs: int,
-    _mark,
     max_collect_band_rows: int = 2_000_000,
 ) -> None:
     """Distributed-mode body (the r5 shape): mapInPandas signer evaluated
@@ -484,7 +443,6 @@ def _process_batch_distributed(
     driver_bookkeeping = len(new_pdf) <= max_collect_band_rows
     if not driver_bookkeeping:
         new_pdf = None
-    _mark("sign_collect_band_rows")
 
     # the index LISTING must happen before the background overwrite of
     # idx_batch_dir starts: on a REPLAYED batch that overwrite first
@@ -565,7 +523,6 @@ def _process_batch_distributed(
                 .limit(max_collect_pairs + 1)
                 .collect()
             )
-            _mark("probe_collect_pairs")
             overflow = len(raw_pairs) > max_collect_pairs
             new_ids = set(new_pdf["__id"])
             seen = set()
@@ -602,14 +559,12 @@ def _process_batch_distributed(
                 .distinct()
             )
             raw_pairs = new_involving.limit(max_collect_pairs + 1).collect()
-            _mark("probe_collect_pairs")
             overflow = len(raw_pairs) > max_collect_pairs
             cand_rows = [(r["a_id"], r["b_id"]) for r in raw_pairs]
     finally:
         for t in threads:
             t.join()
         band_rows.unpersist()
-        _mark("writes_joined")
     if errs:
         raise errs[0]
 
@@ -640,10 +595,8 @@ def _process_batch_distributed(
         ids_df = spark.createDataFrame([(i,) for i in need], "doc_id long")
         pruned = known.join(F.broadcast(ids_df), "doc_id", "left_semi")
     texts = {r["doc_id"]: r["text"] for r in pruned.collect()}
-    _mark("pruned_text_collect")
     a_out, b_out, j_out = _verify_pairs_local(cand_rows, texts, tau, shingle_n)
     _write_pairs_parquet(pairs_batch_dir, a_out, b_out, j_out)
-    _mark("verify_write")
 
 
 def _known_docs(

@@ -149,7 +149,6 @@ def run_tws_user_totals(
     parquet_path: str,
     max_files: int = 1,
     return_query: bool = False,
-    changelog: bool = True,
 ):
     """Streaming per-user totals through transformWithStateInPandas.
     Returns the raw memory-sink DataFrame (one emission per key per
@@ -179,14 +178,12 @@ def run_tws_user_totals(
     # difference between commit cost ∝ state size × partitions and
     # ∝ rows-changed-this-batch — the production setting for any
     # large-state stream.  Full profile table in SCALE.md (round 7).
-    # changelog=False exists ONLY for tools/tws_ab.py's interleaved A/B
-    # (snapshot-per-commit baseline); production callers keep the default.
     tws_confs = {
         "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
         "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled": "true" if changelog else "false",
+        "changelogCheckpointing.enabled": "true",
     }
     prior: dict = {}
     for _k, _v in tws_confs.items():

@@ -50,3 +50,20 @@ def test_live_repo_has_no_dangling_citations():
     missing, n_seen = dangling()
     assert missing == [], f"dangling artifact citations: {missing}"
     assert n_seen > 0
+
+
+def test_missing_script_citation_fails(tmp_path):
+    tools = tmp_path / "tools"
+    tools.mkdir()
+    (tools / "kept.py").write_text(
+        '"""Protocol of tools/ghost_ab.py; helpers in tools/kept.py.\n'
+        'Older runs: `tools/old_ab.py`, last present at commit abc1234."""\n'
+    )
+    (tmp_path / "README.md").write_text("run tools/readme_ghost.py first")
+    (tmp_path / "SCALE.md").write_text("measured by tools/history_only.py")
+    missing, n_seen = dangling(root=str(tmp_path))
+    assert missing == [
+        ("README.md", "tools/readme_ghost.py"),
+        ("tools/kept.py", "tools/ghost_ab.py"),
+    ]
+    assert n_seen == 3

@@ -622,19 +622,55 @@ def test_xxhash_fast_signer_parity(spark):
             "doc_id",
             F.transform("sh", lambda s: F.xxhash64(s)).alias("hashes"),
         )
-        a = (
-            D.xxhash_banded_rows_fast(hashed)
-            .toPandas()
-            .sort_values(["__id", "band"])
-            .reset_index(drop=True)
-        )
-        b = (
-            xxhash_banded_rows(df)
-            .toPandas()
-            .sort_values(["__id", "band"])
-            .reset_index(drop=True)
-        )
-        assert a.equals(b)
+        for num_perm, bands, rows_per_band in ((32, 8, 4), (16, 4, 4)):
+            a = (
+                D.xxhash_banded_rows_fast(
+                    hashed, num_perm=num_perm, bands=bands,
+                    rows_per_band=rows_per_band,
+                )
+                .toPandas()
+                .sort_values(["__id", "band"])
+                .reset_index(drop=True)
+            )
+            b = (
+                xxhash_banded_rows(
+                    df, num_perm=num_perm, bands=bands,
+                    rows_per_band=rows_per_band,
+                )
+                .toPandas()
+                .sort_values(["__id", "band"])
+                .reset_index(drop=True)
+            )
+            assert a.equals(b)
+
+
+def test_xxhash_fast_signer_string_ids_and_num_perm_guard(spark):
+    """The fast signer keeps the input id type (string doc ids here) with
+    rows identical to the expression ladder, and rejects a num_perm that
+    the bands do not cover before any job runs."""
+    from crawling_vectordb_llm_spark.operators.incremental_dedup import (
+        xxhash_banded_rows,
+    )
+
+    df = read_table(spark, SF_SMALL, "documents").select(
+        F.concat(F.lit("doc-"), F.col("doc_id")).alias("doc_id"), "text"
+    )
+    hashed = df.select(
+        "doc_id",
+        F.transform(D.word_shingles("text", 3), lambda s: F.xxhash64(s)).alias(
+            "hashes"
+        ),
+    ).where(F.size("hashes") > 0)
+    fast = D.xxhash_banded_rows_fast(hashed)
+    assert fast.schema["__id"].dataType.simpleString() == "string"
+    key = ["__id", "band"]
+    a = fast.toPandas().sort_values(key).reset_index(drop=True)
+    b = xxhash_banded_rows(df).toPandas().sort_values(key).reset_index(drop=True)
+    assert len(a) > 0 and a.equals(b)
+    with pytest.raises(
+        ValueError, match="num_perm=16, bands=8, rows_per_band=4"
+    ):
+        D.xxhash_banded_rows_fast(hashed, num_perm=16)
 
 
 def test_minhash_near_dup_pairs_matches_expression_form(spark):

@@ -58,10 +58,7 @@ def test_threshold_join_strategies_agree(spark):
     key = lambda rows: {(r["a_id"], r["b_id"], r["score"]) for r in rows}  # noqa: E731
     blocked = key(threshold_similarity_join(emb, None, 0.4).collect())
     sql = key(threshold_similarity_join(emb, None, 0.4, strategy="sql").collect())
-    bcast = key(
-        threshold_similarity_join(emb, None, 0.4, strategy="broadcast").collect()
-    )
-    assert blocked == sql == bcast and len(blocked) > 0
+    assert blocked == sql and len(blocked) > 0
 
 
 def test_threshold_join_blocked_multi_block_exact(spark):
@@ -88,18 +85,6 @@ def test_threshold_join_blocked_never_collects_to_driver(spark, monkeypatch):
     monkeypatch.setattr(SparkDataFrame, "collect", _boom)
     out = threshold_similarity_join(emb, None, 0.4, n_blocks=4).toPandas()
     assert len(out) > 0
-
-
-def test_threshold_join_broadcast_guard(spark):
-    """strategy='broadcast' must refuse a right side above the size guard
-    instead of collecting it to the driver."""
-    import pytest
-
-    emb = read_table(spark, SF_SMALL, "embeddings")
-    with pytest.raises(ValueError, match="max_broadcast_rows"):
-        threshold_similarity_join(
-            emb, None, 0.4, strategy="broadcast", max_broadcast_rows=10
-        )
 
 
 def test_threshold_join_blocked_two_relations(spark):

@@ -19,6 +19,11 @@ Run as part of the pre-snapshot gate (README 'Pre-snapshot gate'):
 Only citations of CURRENT-round or earlier artifacts are checked; the
 pattern intentionally catches any _r<digits> suffix so stale references
 to deleted artifacts fail too.
+
+The sources and README.md are also checked for `tools/<name>.py`
+citations of scripts that no longer exist.  A citation written as
+"`tools/<name>.py`, last present at commit <sha>" names a removed script
+on purpose and passes; the other docs keep their history as written.
 """
 
 from __future__ import annotations
@@ -37,6 +42,7 @@ SOURCE_FILES = ["bench.py", "__spark_entry__.py"]
 # artifacts — they describe and synthesize the failure mode
 EXCLUDE = {"tools/check_artifacts.py", "tests/test_check_artifacts.py"}
 PATTERN = re.compile(r"\b([A-Z][A-Z0-9_]*_r\d+\.json)\b")
+SCRIPT_PATTERN = re.compile(r"\b(tools/\w+\.py)\b(?!`?, last present at commit)")
 
 
 def citation_paths(root: str = ROOT) -> list[str]:
@@ -50,18 +56,23 @@ def citation_paths(root: str = ROOT) -> list[str]:
 
 
 def dangling(root: str = ROOT, paths: list[str] | None = None) -> tuple[list, int]:
-    """(sorted [(relpath, missing_artifact)], n_distinct_citations)."""
+    """(sorted [(relpath, missing_artifact_or_script)], n_distinct_citations)."""
     missing: set[tuple[str, str]] = set()
     seen: set[str] = set()
     for path in paths if paths is not None else citation_paths(root):
         if not os.path.exists(path):
             continue
-        if os.path.relpath(path, root) in EXCLUDE:
+        rel = os.path.relpath(path, root)
+        if rel in EXCLUDE:
             continue
-        for name in PATTERN.findall(open(path).read()):
+        text = open(path).read()
+        names = PATTERN.findall(text)
+        if rel.endswith(".py") or rel == "README.md":
+            names += SCRIPT_PATTERN.findall(text)
+        for name in names:
             seen.add(name)
             if not os.path.exists(os.path.join(root, name)):
-                missing.add((os.path.relpath(path, root), name))
+                missing.add((rel, name))
     return sorted(missing), len(seen)
 
 
@@ -71,7 +82,7 @@ def main() -> int:
         for rel, name in missing:
             print(f"DANGLING: {rel} cites {name} which does not exist")
         return 1
-    print(f"ok: {n_seen} distinct artifact citations, all present")
+    print(f"ok: {n_seen} distinct artifact and script citations, all present")
     return 0
 
 

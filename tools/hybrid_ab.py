@@ -1,6 +1,7 @@
 """Measure the brute-vs-IVF crossover behind `BRUTE_TOPK_MAX_ROWS`
 (the r9 hybrid dispatch, VERDICT r8 #3) with the drift-immune
-interleaved protocol of tools/ab_bench.py.
+interleaved protocol of `tools/ab_bench.py`, last present at commit
+524cad2.
 
 At each corpus size the two FORCED strategies of
 `topk_similarity_self_join` (strategy="brute" vs strategy="ivf") run

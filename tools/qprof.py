@@ -22,6 +22,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from crawling_vectordb_llm_spark.session import get_spark
 from crawling_vectordb_llm_spark.suite import QUERIES
 
+USAGE = "usage: python tools/qprof.py NAME [NAME...] [--reps N] [--sf DIR]"
+
 
 def profile(spark, name: str, sf_dir: str, reps: int) -> dict:
     fn = QUERIES[name]
@@ -69,12 +71,16 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     it = iter(sys.argv[1:])
     for a in it:
-        if a == "--reps":
-            reps = int(next(it))
-        elif a == "--sf":
-            sf_dir = next(it)
+        if a in ("--reps", "--sf"):
+            value = next(it, None)
+            if value is None:
+                raise SystemExit(f"{a} needs a value\n{USAGE}")
+            if a == "--reps":
+                reps = int(value)
+            else:
+                sf_dir = value
         elif a.startswith("--"):
-            raise SystemExit(f"unknown option {a}")
+            raise SystemExit(f"unknown option {a}\n{USAGE}")
         else:
             args.append(a)
     spark = get_spark("qprof")
