@@ -2,11 +2,14 @@
 (the reference retrieves by embedding only; a training-data/RAG pipeline
 needs both, and hybrid = union of the two candidate sets).
 
-Pure DataFrame ops: tokenize → term frequencies → document frequencies →
-BM25 scoring join → grouped top-k.  Everything shuffles on `term` (uniform
-after stopword-heavy heads are capped by... nothing here — at 100 TB you'd
-drop ultra-high-df terms, which contribute ~0 idf anyway) and then once on
-(query, doc) for the final sum.
+Pure DataFrame ops: tokenize → keep only tokens of the query vocabulary
+→ term frequencies → document frequencies → BM25 scoring join → grouped
+top-k.  The vocabulary filter is a join of the exploded tokens to the
+distinct query terms, so the (doc, term) count and the df count shuffle
+only query-term rows — a query batch's vocabulary, not the corpus's; tf
+and df of every query term are unchanged, so are the scores.  Document
+lengths and the corpus statistics (n, avgdl) still read every token.
+The last shuffle is on (query, doc) for the final sum.
 
 Determinism for the oracle: per-(term,doc) partial scores are cast to
 DECIMAL(18,12) before the final sum, so the score is order-independent and
@@ -18,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crawling_vectordb_llm_spark.operators.topk import grouped_topk
+from crawling_vectordb_llm_spark.operators.topk import driver_frame, grouped_topk
 
 K1 = 1.2
 B = 0.75
@@ -32,11 +35,12 @@ def bm25_topk(
     text_col: str = "text",
 ) -> DataFrame:
     """Top-k BM25 docs per keyword query.  queries = [(query_id, text)]."""
-    spark = docs.sparkSession
-    qterms = spark.createDataFrame(
-        [(qid, t) for qid, text in queries for t in text.split()],
+    # distinct (query, term) pairs, deduplicated on the driver
+    qterms = driver_frame(
+        docs.sparkSession,
+        dict.fromkeys((qid, t) for qid, text in queries for t in text.split()),
         "query_id long, term string",
-    ).distinct()
+    )
     scored = bm25_scores(docs, qterms, id_col=id_col, text_col=text_col)
     return grouped_topk(
         scored, ["query_id"], [F.desc("score"), F.asc(id_col)], k
@@ -64,7 +68,14 @@ def bm25_scores(
     toks = docs.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("term")
     )
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    # only query-vocabulary tokens reach the (doc, term) count: a term no
+    # query holds scores nothing, and filtering before the aggregation
+    # leaves tf and df of every query term as they were
+    tf = (
+        toks.join(qterms.select("term").distinct(), "term", "left_semi")
+        .groupBy(id_col, "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
     dl = docs.select(
         F.col(id_col), F.size(F.split(F.col(text_col), " ")).alias("dl")
     )
@@ -92,7 +103,7 @@ def bm25_scores(
     # a size misestimate of a tiny derived relation.
     partial = (
         F.broadcast(qterms).join(tf, "term")
-        .join(F.broadcast(dfreq.join(qterms.select("term").distinct(), "term")), "term")
+        .join(F.broadcast(dfreq), "term")
         .join(dl, id_col)
         .select(
             "query_id",

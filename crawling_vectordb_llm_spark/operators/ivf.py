@@ -32,8 +32,11 @@ from pyspark.sql import functions as F
 
 from crawling_vectordb_llm_spark.operators.topk import (
     DEFAULT_MAX_QUERY_ROWS,
+    cell_topk,
     collect_query_rows,
+    driver_frame,
     grouped_topk,
+    merge_topk,
     normalize_rows as _normalize,
 )
 
@@ -729,8 +732,29 @@ def ivf_search(
     qrows = collect_query_rows(
         queries, query_id, query_vec, max_query_rows, caller="ivf_search"
     )
-    qids = np.array([r[0] for r in qrows])
-    qmat = _normalize(np.array([r[1] for r in qrows], dtype=np.float64))
+    return _ivf_search_core(
+        np.array([r[0] for r in qrows]),
+        np.array([r[1] for r in qrows], dtype=np.float64),
+        assigned_corpus, centroids, k, n_probe, query_id, corpus_id,
+        corpus_vec,
+    )
+
+
+def _ivf_search_core(
+    qids: np.ndarray,
+    qmat: np.ndarray,
+    assigned_corpus: DataFrame,
+    centroids: np.ndarray,
+    k: int,
+    n_probe: int,
+    query_id: str,
+    corpus_id: str,
+    corpus_vec: str,
+) -> DataFrame:
+    """ivf_search on driver-held queries (`qids`, float64 `qmat`, one
+    row per id) — what VectorCollection.search_by_text calls with the
+    matrix it encoded, so the queries never round-trip through Spark."""
+    qmat = _normalize(qmat)
     probe_cells = np.argsort(-(qmat @ centroids.T), axis=1)[:, :n_probe]
 
     # cell -> (query ids, query matrix): the per-cell GEMM operands
@@ -738,71 +762,36 @@ def ivf_search(
     for c in np.unique(probe_cells):
         mask = (probe_cells == c).any(axis=1)
         cell_q[int(c)] = (qids[mask], qmat[mask])
-    spark = queries.sparkSession
+    spark = assigned_corpus.sparkSession
     bq = spark.sparkContext.broadcast(cell_q)
 
     def _cell_gemm_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cq = bq.value
-        out_q: list[np.ndarray] = []
-        out_i: list[np.ndarray] = []
-        out_s: list[np.ndarray] = []
+        kept = None  # partition-local (query id, corpus id, score) top-k
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             cells = pdf["centroid_id"].to_numpy()
             cmat = _normalize(np.array(list(pdf[corpus_vec]), dtype=np.float64))
             ids = pdf[corpus_id].to_numpy()
+            parts = [] if kept is None else [kept]
             for c in np.unique(cells):
                 q = cq.get(int(c))
                 if q is None:
                     continue  # no query probes this cell: skipped entirely
                 sel = cells == c
-                sub_ids, sub = ids[sel], cmat[sel]
-                scores = q[1] @ sub.T  # (nq_cell, n_cell_rows)
-                # exact per-row rank cap on the CONTRACT's ordering
-                # (6-dp rounded score desc, id asc): admit each query's
-                # local top-k under that total order.  Any global-top-k
-                # row has local rank < k (every row ahead of it locally
-                # is ahead of it globally too), so the admitted set is a
-                # superset of the global answer no matter how rows are
-                # partitioned — and, unlike the previous ties-inclusive
-                # threshold, output is bounded at nq*k even when a whole
-                # duplicate-heavy cell slice ties at the boundary score
-                # (ADVICE r5).  Columns are pre-sorted by id asc so a
-                # STABLE per-row argsort on -rs realizes the id-asc
-                # tiebreak exactly; an argpartition would split boundary
-                # ties arbitrarily and break the superset guarantee.
-                rs = np.round(scores, 6)
-                if k < rs.shape[1]:
-                    id_order = np.argsort(sub_ids, kind="stable")
-                    top = np.argsort(
-                        -rs[:, id_order], axis=1, kind="stable"
-                    )[:, :k]
-                    qi = np.repeat(np.arange(rs.shape[0]), k)
-                    ci = id_order[top.ravel()]
-                else:
-                    qi, ci = np.nonzero(np.ones_like(rs, dtype=bool))
-                out_q.append(q[0][qi])
-                out_i.append(sub_ids[ci])
-                out_s.append(scores[qi, ci])
-        if not out_q:
-            yield pd.DataFrame({query_id: [], corpus_id: [], "score": []})
-            return
-        qarr = np.concatenate(out_q).astype(np.int64)
-        iarr = np.concatenate(out_i)
-        sarr = np.round(np.concatenate(out_s), 6)
-        # one vectorized partition-local rank pass: (query, score desc,
-        # id asc) — the same ordering as the global stage, so truncation
-        # to k matches what the global rank would keep
-        order = np.lexsort((iarr, -sarr, qarr))
-        qs, is_, ss = qarr[order], iarr[order], sarr[order]
-        starts = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
-        sizes = np.diff(np.append(starts, len(qs)))
-        ranks = np.arange(len(qs)) - np.repeat(starts, sizes)
-        keep = ranks < k
-        yield pd.DataFrame(
-            {query_id: qs[keep], corpus_id: is_[keep], "score": ss[keep]}
-        )
+                # rank on the CONTRACT's ordering: 6-dp rounded score desc,
+                # id asc (ADVICE r5: output stays bounded at nq*k even when
+                # a duplicate-heavy cell slice ties at the boundary score)
+                parts.append(
+                    cell_topk(q[0], ids[sel], np.round(q[1] @ cmat[sel].T, 6), k)
+                )
+            if parts:
+                kept = merge_topk(parts, k)
+        if kept is not None:
+            yield pd.DataFrame(
+                {query_id: kept[0], corpus_id: kept[1], "score": kept[2]}
+            )
 
     cid_t = assigned_corpus.schema[corpus_id].dataType.simpleString()
     scored = assigned_corpus.select(
@@ -1232,12 +1221,13 @@ def _ivf_pruned_replicated(
                 else:
                     pair_rows.append((gj, sj, pk, "b"))
                 pk += 1
-    pairs_df = spark.createDataFrame(
-        pair_rows, "__grp int, __sub int, __pk int, __role string"
+    pairs_df = driver_frame(
+        spark, pair_rows, "__grp int, __sub int, __pk int, __role string"
     )
 
     # fine cell -> (executed block, its sub count): one tiny broadcast map
-    cell_map = spark.createDataFrame(
+    cell_map = driver_frame(
+        spark,
         [
             (int(c), int(group[i]), int(n_subs[group[i]]))
             for i, c in enumerate(cells)

@@ -9,8 +9,8 @@ is often too large to even scan per query batch; product quantization
 scan-size reduction, with exact top-k restored by a float rerank of the
 shortlisted candidates only.
 
-Shape (mirrors operators/knn.knn_quantized_rerank, which is the scalar-
-quantization sibling):
+Shape of flat PQ (`pq_knn_rerank`; mirrors knn.knn_quantized_rerank,
+the scalar-quantization sibling):
 
   train   — per-subspace k-means codebooks on a driver-side sample
             (deterministic seeded Lloyd's; FAISS-style bounded sample).
@@ -22,6 +22,15 @@ quantization sibling):
             UNquantized query, then approx_score = sum of m table lookups
             per candidate — no float vector reads.  Per-partition
             shortlist, then exact float64 cosine rerank of shortlist only.
+
+`ivfpq_topk` trains on the driver and then makes ONE pass over the corpus:
+per Arrow batch a single kernel assigns each row its coarse cell,
+residual-encodes it and ADC-scores each cell against only the queries
+that probe it, keeping each query's top-`shortlist` rows of the
+partition (a running merge across batches).  No codes table and no
+(query, cell) probe join are materialized, so the pass costs one Python
+worker per task instead of three; the partition-local tops are a superset
+of the global shortlist, which the grouped top-k then cuts exactly.
 
 Scale notes (SCALE.md): stage 1 reads 8 B/vector and does integer-indexed
 table lookups (vectorized via numpy take + reshape); stage 2 reads float
@@ -43,8 +52,11 @@ from pyspark.sql import functions as F
 from crawling_vectordb_llm_spark.operators.knn import knn_rerank_shortlist
 from crawling_vectordb_llm_spark.operators.topk import (
     DEFAULT_MAX_QUERY_ROWS,
+    cell_topk,
     collect_query_rows,
+    driver_frame,
     grouped_topk,
+    merge_topk,
     normalize_rows as _normalize,
 )
 
@@ -277,34 +289,130 @@ def ivfpq_topk(
     GEMM against the centroid table and q.r is m ADC table lookups — the
     centroid term re-centers each cell so one codebook serves all cells.
 
-    Scale shape: with the corpus written partitionBy(centroid_id)
-    (plans/index_build.py layout), the probe join is partition PRUNING —
-    n_probe/n_centroids of the bytes are read, at m bytes/vector.  Shuffle
-    = O(partitions x queries x shortlist).  Recall knobs: n_probe (cells)
-    x shortlist (ADC survivors); both asserted by recall tests against
-    exact kNN.
+    Scale shape: one map-side pass scores each corpus row only against
+    the queries that probe its cell and keeps a partition-local
+    top-`shortlist` per query, so the shuffle is O(partitions x queries x
+    shortlist), independent of corpus size.  Query ids may be of any
+    type; the kernel indexes queries by position.  Recall knobs: n_probe
+    (cells) x shortlist (ADC survivors); both asserted by recall tests
+    against exact kNN.
     """
+    spark = queries.sparkSession
+    cents, books = _ivfpq_train(
+        corpus, n_centroids, m_subvectors, n_codes, corpus_vec, seed
+    )
+    m_subvectors, _, sub_d = books.shape
+
+    # --- one scan: assign, residual-encode and ADC-score probed cells ---
+    qrows = collect_query_rows(
+        queries, query_id, query_vec, max_query_rows, caller="ivfpq_topk"
+    )
+    qmat = _normalize(np.array([r[1] for r in qrows], dtype=np.float64))
+    q_cent = qmat @ cents.T  # (nq, n_centroids): the q.centroid term
+    probe_cells = np.argsort(-q_cent, axis=1)[:, :n_probe]
+    tables = np.einsum(
+        "isd,scd->isc", qmat.reshape(len(qmat), m_subvectors, sub_d), books
+    )
+    # cell -> positions of the queries that probe it
+    cell_q = {
+        int(c): np.flatnonzero((probe_cells == c).any(axis=1))
+        for c in np.unique(probe_cells)
+    }
+    qids = pd.Series([r[0] for r in qrows])  # any id type, by position
+    bc = spark.sparkContext.broadcast(
+        (cents, books, tables.reshape(len(qmat), -1), q_cent, cell_q, qids)
+    )
+
+    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cents_, books_, flat, qc, cq, qids_ = bc.value
+        offs = np.arange(m_subvectors) * n_codes
+        kept: tuple | None = None  # (query pos, corpus id, score)
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            # the same numpy expressions, on the same batches, as
+            # assign_centroids then residual encoding, so cells and codes
+            # are the ones a stored IVF-PQ table would hold
+            mat = _normalize(np.array(list(pdf[corpus_vec]), dtype=np.float64))
+            cid = np.argmax(mat @ cents_.T, axis=1)
+            r = mat - cents_[cid]
+            codes = np.empty((len(mat), m_subvectors), dtype=np.int64)
+            for s in range(m_subvectors):
+                sub = r[:, s * sub_d : (s + 1) * sub_d]
+                d2 = -2.0 * (sub @ books_[s].T) + (books_[s] ** 2).sum(axis=1)[None, :]
+                codes[:, s] = np.argmin(d2, axis=1)
+            codes += offs[None, :]
+            ids = pdf[corpus_id].to_numpy()
+            parts = [] if kept is None else [kept]
+            for c in np.unique(cid):
+                qs = cq.get(int(c))
+                if qs is None:
+                    continue  # no query probes this cell
+                sel = cid == c
+                # (queries, rows, m) gather summed over its contiguous last
+                # axis: each score is the same length-m reduction as a
+                # per-row ADC lookup, so scores are bit-stable
+                adc = flat[qs[:, None, None], codes[sel][None, :, :]].sum(axis=2)
+                parts.append(cell_topk(qs, ids[sel], adc + qc[qs, c][:, None], shortlist))
+            if parts:
+                kept = merge_topk(parts, shortlist)
+        if kept is not None:
+            yield pd.DataFrame(
+                {
+                    query_id: qids_.iloc[kept[0]].to_numpy(),
+                    corpus_id: kept[1],
+                    "approx_score": kept[2],
+                }
+            )
+
+    qid_t = queries.schema[query_id].dataType.simpleString()
+    cid_t = corpus.schema[corpus_id].dataType.simpleString()
+    scored = corpus.select(corpus_id, corpus_vec).mapInPandas(
+        _scan, schema=f"{query_id} {qid_t}, {corpus_id} {cid_t}, approx_score double"
+    )
+    short = grouped_topk(
+        scored, [query_id], [F.desc("approx_score"), F.asc(corpus_id)], shortlist
+    ).select(query_id, corpus_id)
+    # the rerank's query side is the rows collected above, not a second
+    # evaluation of the caller's relation
+    qframe = driver_frame(
+        spark, qrows, f"{query_id} {qid_t}, {query_vec} array<double>"
+    )
+    return knn_rerank_shortlist(
+        short, qframe, corpus, k,
+        query_id=query_id, query_vec=query_vec,
+        corpus_id=corpus_id, corpus_vec=corpus_vec,
+    )
+
+
+def _ivfpq_train(
+    corpus: DataFrame,
+    n_centroids: int,
+    m_subvectors: int | None,
+    n_codes: int,
+    corpus_vec: str,
+    seed: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """ivfpq_topk's index training on driver samples: the coarse
+    centroids (n_centroids, dim) and the residual codebooks
+    (m, n_codes, dim/m)."""
     from crawling_vectordb_llm_spark.operators.ivf import (
-        assign_centroids,
+        bounded_random_sample,
         kmeans_centroids,
     )
 
-    spark = queries.sparkSession
     fit_sample: dict = {}
     cents = kmeans_centroids(
         corpus, n_centroids, corpus_vec, seed=seed, sample_out=fit_sample
     )
-    assigned = assign_centroids(corpus, cents, corpus_id, corpus_vec)
 
     # --- train PQ on residuals (seeded random driver sample) ---
-    from crawling_vectordb_llm_spark.operators.ivf import bounded_random_sample
-
     # residual-codebook sample under the same FAISS-rule cap as pq_train.
     # Sample the RAW corpus and recompute each sampled row's centroid on
     # the driver (r13, guide §1/§5): sampling `assigned` forced the whole
     # assignment mapInPandas stage to materialize eagerly just to collect
-    # <=20k rows — a full extra pass over the corpus that the lazy encode
-    # pipeline then re-ran anyway.  The driver-side argmax is the same
+    # <=20k rows — a full extra pass over the corpus that the scan then
+    # re-ran anyway.  The driver-side argmax is the same
     # numpy expression assign_centroids runs per batch (normalize -> GEMM
     # -> argmax), so the sampled (vector, centroid) pairs are identical;
     # centroid_id is a function of the vector, so dropping it from the
@@ -357,85 +465,7 @@ def ivfpq_topk(
                 break
             cc = new
         books[s] = cc
-
-    # --- encode residuals (map-only) ---
-    bc = spark.sparkContext.broadcast((cents, books))
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents_, books_ = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = _normalize(np.array(list(pdf[corpus_vec]), dtype=np.float64))
-            r = mat - cents_[pdf["centroid_id"].to_numpy()]
-            codes = np.empty((len(mat), m_subvectors), dtype=np.int32)
-            for s in range(m_subvectors):
-                sub = r[:, s * sub_d : (s + 1) * sub_d]
-                d2 = -2.0 * (sub @ books_[s].T) + (books_[s] ** 2).sum(axis=1)[None, :]
-                codes[:, s] = np.argmin(d2, axis=1)
-            yield pd.DataFrame(
-                {
-                    corpus_id: pdf[corpus_id],
-                    "centroid_id": pdf["centroid_id"],
-                    "codes": list(codes),
-                }
-            )
-
-    cid_t = corpus.schema[corpus_id].dataType.simpleString()
-    encoded = assigned.mapInPandas(
-        _encode, schema=f"{corpus_id} {cid_t}, centroid_id int, codes array<int>"
-    )
-
-    # --- probe cells per query, ADC-score only those cells ---
-    qrows = collect_query_rows(
-        queries, query_id, query_vec, max_query_rows, caller="ivfpq_topk"
-    )
-    qids = np.array([r[0] for r in qrows])
-    qmat = _normalize(np.array([r[1] for r in qrows], dtype=np.float64))
-    q_cent = qmat @ cents.T  # (nq, n_centroids): the q.centroid term
-    probe_cells = np.argsort(-q_cent, axis=1)[:, :n_probe]
-    tables = np.einsum(
-        "isd,scd->isc", qmat.reshape(len(qmat), m_subvectors, sub_d), books
-    )
-    probes = spark.createDataFrame(
-        [(int(q), [int(c) for c in probe_cells[i]]) for i, q in enumerate(qids)],
-        f"{query_id} long, cells array<int>",
-    ).select(query_id, F.explode("cells").alias("centroid_id"))
-    bq = spark.sparkContext.broadcast((qids, q_cent, tables))
-
-    cand = encoded.join(F.broadcast(probes), "centroid_id")
-
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, qc, tabs = bq.value
-        qpos = {int(q): i for i, q in enumerate(ids)}
-        flat = tabs.reshape(len(ids), m_subvectors * n_codes)
-        offs = np.arange(m_subvectors) * n_codes
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qi = np.array([qpos[int(q)] for q in pdf[query_id]])
-            codes = np.array(list(pdf["codes"]), dtype=np.int64) + offs[None, :]
-            adc = flat[qi[:, None], codes].sum(axis=1)
-            score = adc + qc[qi, pdf["centroid_id"].to_numpy()]
-            yield pd.DataFrame(
-                {
-                    query_id: pdf[query_id],
-                    corpus_id: pdf[corpus_id],
-                    "approx_score": score,
-                }
-            )
-
-    scored = cand.mapInPandas(
-        _score, schema=f"{query_id} long, {corpus_id} {cid_t}, approx_score double"
-    )
-    short = grouped_topk(
-        scored, [query_id], [F.desc("approx_score"), F.asc(corpus_id)], shortlist
-    ).select(query_id, corpus_id)
-    return knn_rerank_shortlist(
-        short, queries, corpus, k,
-        query_id=query_id, query_vec=query_vec,
-        corpus_id=corpus_id, corpus_vec=corpus_vec,
-    )
+    return cents, books
 
 
 def pq_knn_rerank(

@@ -9,14 +9,69 @@ oracle-hash-stable (SURVEY §7 hard part b).
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
 def normalize_rows(mat: np.ndarray) -> np.ndarray:
     """L2-normalize each row; all-zero rows stay zero (the 1e-30 floor)."""
     return mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
+
+
+def driver_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A DataFrame of driver-held tuples (query ids and vectors, query
+    terms, id lists, small metadata tables), built through Arrow.
+
+    `spark.createDataFrame(<list of tuples>, schema)` is backed by a
+    Python RDD: every evaluation of it runs one Python-worker task per
+    slice, which costs more than the scoring it feeds at request scale.
+    A pandas frame goes through Arrow into a JVM-side local relation and
+    no Python worker ever runs for it.  Fields are matched to `schema` by
+    position and convert exactly (float32 vectors widen to float64 as a
+    cast would).  An empty result keeps the plain empty frame."""
+    rows = list(rows)
+    if not rows:
+        return spark.createDataFrame([], schema)
+    return spark.createDataFrame(pd.DataFrame.from_records(rows), schema)
+
+
+def cell_topk(keys: np.ndarray, ids: np.ndarray, scores: np.ndarray, n: int) -> tuple:
+    """Each query's best `n` columns of a (len(keys), len(ids)) score
+    block, in the (score desc, id asc) order of the grouped top-k window
+    that follows: the map-side half of an exact top-k.  Any row of a
+    query's global top-n has local rank < n (every row ahead of it locally
+    is ahead of it globally too), so the kept rows are a superset of the
+    global answer however rows are partitioned, and at most n per query
+    even when a whole duplicate-heavy block ties at the boundary score.
+    Columns are put in id order first so a STABLE sort on -score realizes
+    the id-asc tiebreak exactly; an argpartition would split boundary ties
+    arbitrarily and break the superset guarantee.  Returns flat (key, id,
+    score) arrays."""
+    if n < len(ids):
+        id_order = np.argsort(ids, kind="stable")
+        top = np.argsort(-scores[:, id_order], axis=1, kind="stable")[:, :n]
+        qi = np.repeat(np.arange(len(keys)), n)
+        ci = id_order[top.ravel()]
+    else:
+        qi, ci = np.nonzero(np.ones_like(scores, dtype=bool))
+    return keys[qi], ids[ci], scores[qi, ci]
+
+
+def merge_topk(parts: list[tuple], n: int) -> tuple:
+    """Merge flat (key, id, score) sets from `cell_topk`, keeping each
+    key's best `n` in (score desc, id asc) order: one vectorized rank pass
+    in the global window's order, so truncation keeps what it would."""
+    q = np.concatenate([p[0] for p in parts])
+    ids = np.concatenate([p[1] for p in parts])
+    s = np.concatenate([p[2] for p in parts])
+    order = np.lexsort((ids, -s, q))
+    q, ids, s = q[order], ids[order], s[order]
+    starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
+    rank = np.arange(len(q)) - np.repeat(starts, np.diff(np.append(starts, len(q))))
+    keep = rank < n
+    return q[keep], ids[keep], s[keep]
 
 
 def grouped_topk(

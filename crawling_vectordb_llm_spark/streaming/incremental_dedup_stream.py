@@ -57,6 +57,7 @@ from crawling_vectordb_llm_spark.operators.incremental_dedup import (
     incremental_candidate_pairs,
     portable_banded_rows_fast,
 )
+from crawling_vectordb_llm_spark.operators.topk import driver_frame
 
 _EMPTY_INDEX_SCHEMA = "__id long, band int, band_hash bigint"
 # LSH geometry of portable_banded_rows_fast — the stream's index format.
@@ -592,7 +593,7 @@ def _process_batch_distributed(
         # big list: a thousands-literal In() costs more in planning and
         # per-row eval than it saves (measured 1.9s vs 0.5s at sf1) —
         # broadcast-semi-join instead
-        ids_df = spark.createDataFrame([(i,) for i in need], "doc_id long")
+        ids_df = driver_frame(spark, [(i,) for i in need], "doc_id long")
         pruned = known.join(F.broadcast(ids_df), "doc_id", "left_semi")
     texts = {r["doc_id"]: r["text"] for r in pruned.collect()}
     a_out, b_out, j_out = _verify_pairs_local(cand_rows, texts, tau, shingle_n)

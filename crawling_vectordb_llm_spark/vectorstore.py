@@ -28,12 +28,13 @@ from pyspark.sql import functions as F
 from crawling_vectordb_llm_spark.embedding import hash_encode_batch, make_embed_udf
 from crawling_vectordb_llm_spark.functions.vector import l2_normalize
 from crawling_vectordb_llm_spark.operators.ivf import (
+    _ivf_search_core,
     assign_centroids,
-    ivf_search,
     kmeans_centroids,
 )
-from crawling_vectordb_llm_spark.operators.knn import knn_join_numpy
+from crawling_vectordb_llm_spark.operators.knn import _knn_join_core
 from crawling_vectordb_llm_spark.operators.merge import upsert_by_key
+from crawling_vectordb_llm_spark.operators.topk import driver_frame
 
 
 class VectorCollection:
@@ -65,6 +66,11 @@ class VectorCollection:
         self._encode = encode_batch or hash_encode_batch
         self._embed_udf = make_embed_udf(dim=dim, encode_batch=encode_batch)
         self.centroids: np.ndarray | None = None
+        # (version, DataFrame) of the last snapshot read: version
+        # directories are immutable, so the DataFrame stays valid for as
+        # long as the pointer names that version, and re-reading it would
+        # only repeat parquet schema inference (one Spark job per call)
+        self._snapshot: tuple[int, DataFrame] | None = None
 
     # ------------------------------------------------------------ lifecycle
 
@@ -90,9 +96,15 @@ class VectorCollection:
         from crawling_vectordb_llm_spark import mor
         from crawling_vectordb_llm_spark import versioning as V
 
+        v = version if version is not None else V.latest_version(self._table)
+        if self._snapshot is not None and self._snapshot[0] == v:
+            return self._snapshot[1]
         if self.write_mode == "mor":
-            return mor.mor_read(self.spark, self._table, key="id", version=version)
-        return V.read_version(self.spark, self._table, version)
+            df = mor.mor_read(self.spark, self._table, key="id", version=v)
+        else:
+            df = V.read_version(self.spark, self._table, v)
+        self._snapshot = (v, df)
+        return df
 
     def delta_chain_length(self) -> int:
         """MOR read amplification (0 for cow): deltas a read must merge."""
@@ -187,8 +199,9 @@ class VectorCollection:
         ).select("id", "centroid_id").write.mode("overwrite").partitionBy(
             "centroid_id"
         ).parquet(self._assignment)
-        self.spark.createDataFrame(
-            [(i, [float(x) for x in self.centroids[i]]) for i in range(len(self.centroids))],
+        driver_frame(
+            self.spark,
+            enumerate(self.centroids),
             "centroid_id int, centroid array<double>",
         ).coalesce(1).write.mode("overwrite").parquet(self._centroids_path)
 
@@ -215,7 +228,7 @@ class VectorCollection:
         from crawling_vectordb_llm_spark import mor
         from crawling_vectordb_llm_spark import versioning as V
 
-        ids_df = self.spark.createDataFrame([(i,) for i in ids], "id string")
+        ids_df = driver_frame(self.spark, [(i,) for i in ids], "id string")
         if self.write_mode == "mor":
             v = mor.mor_delete(ids_df, self._table, key="id")
         else:
@@ -241,12 +254,13 @@ class VectorCollection:
     ) -> DataFrame:
         """Batch searchByText: embed every query text, cosine top-`limit`
         per query, optional SQL predicate applied BEFORE scoring (J3).
-        Returns (query_id, id, rank, score) — query_id indexes `texts`."""
-        qmat = self._encode(texts, self.dim)
-        queries = self.spark.createDataFrame(
-            [(i, [float(x) for x in qmat[i]]) for i in range(len(texts))],
-            "query_id long, query_vec array<double>",
-        )
+        Returns (query_id, id, rank, score) — query_id indexes `texts`.
+
+        The encoded query matrix is already on the driver, so it goes
+        straight to the operators' cores instead of through a query
+        relation they would only collect back."""
+        qids = np.arange(len(texts), dtype=np.int64)
+        qmat = np.asarray(self._encode(texts, self.dim), dtype=np.float64)
         corpus = self.documents()
         if filter:
             corpus = corpus.where(filter)
@@ -266,15 +280,15 @@ class VectorCollection:
                 .select("id", "centroid_id")
                 .join(corpus.select("id", "vector"), "id")
             )
-            hits = ivf_search(
-                queries, assigned, self.centroids, k=limit, n_probe=n_probe,
-                corpus_id="id", corpus_vec="vector",
+            return _ivf_search_core(
+                qids, qmat, assigned, self.centroids, limit, n_probe,
+                query_id="query_id", corpus_id="id", corpus_vec="vector",
             )
-        else:
-            hits = knn_join_numpy(
-                queries, corpus, k=limit, corpus_id="id", corpus_vec="vector"
-            )
-        return hits
+        return _knn_join_core(
+            qids, qmat, "bigint", corpus, limit,
+            query_id="query_id", corpus_id="id", corpus_vec="vector",
+            score_col="score",
+        )
 
     def search_results_with_docs(self, hits: DataFrame) -> DataFrame:
         """Join hits back to full documents (the reference returns whole

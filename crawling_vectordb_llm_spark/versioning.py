@@ -194,6 +194,8 @@ def history(spark: SparkSession, path: str) -> DataFrame:
     currently targets it.  Driver-side directory walk (version counts are
     small by construction); returned as a DataFrame so it composes with
     SQL like any other table."""
+    from crawling_vectordb_llm_spark.operators.topk import driver_frame
+
     live = latest_version(path)
     rows = []
     for v in _versions(path):
@@ -211,7 +213,8 @@ def history(spark: SparkSession, path: str) -> DataFrame:
                     n_files += 1
                     n_bytes += os.path.getsize(os.path.join(root, f))
         rows.append((v, kind, n_files, n_bytes, v == live))
-    return spark.createDataFrame(
+    return driver_frame(
+        spark,
         rows,
         "version int, kind string, n_files int, n_bytes bigint, is_latest boolean",
     )
